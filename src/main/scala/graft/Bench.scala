@@ -181,8 +181,21 @@ object Bench {
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // one bus settle for the WHOLE run (listener delivery is async);
-    // per-query settling would inflate every timing by the wait
-    Thread.sleep(1000)
+    // per-query settling would inflate every timing by the wait. Poll
+    // the counters until two reads 100 ms apart agree, at most 1 s
+    def counts(): (Long, Long) = {
+      import scala.jdk.CollectionConverters._
+      (jobsByTag.values.asScala.map(_.get).sum,
+        taskMsByTag.values.asScala.map(_.get).sum)
+    }
+    val settleBy = System.nanoTime() + 1000L * 1000 * 1000
+    var last = (-1L, -1L)
+    var cur = counts()
+    while (cur != last && System.nanoTime() < settleBy) {
+      last = cur
+      Thread.sleep(100)
+      cur = counts()
+    }
     // scheduler shape of the pass each query's reported min came from
     def minTag(k: String): String = (p1(k), p2(k)) match {
       case (Right(a), Right(b)) => if (a <= b) s"p1:$k" else s"p2:$k"

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-side session defaults shared by every driver-contract main
-  * (Bench, Verify) and the local tools — ONE config point, so the
-  * benchmarked config and the correctness-gated config are the same
-  * session shape (ADVICE r19: the cached-plan AQE conf lived only in
-  * Bench, so the gate verified a config the bench no longer measured).
+/** Engine-side session defaults shared by the Bench and Verify mains
+  * and by the `perfbench` harness (the tools under `graft.tools` build
+  * their own sessions) — ONE config point, so the benchmarked config
+  * and the correctness-gated config are the same session shape (ADVICE
+  * r19: the cached-plan AQE conf lived only in Bench, so the gate
+  * verified a config the bench no longer measured).
   */
 object SessionDefaults {
 

@@ -177,18 +177,36 @@ object Bm25Index {
       .start()
   }
 
-  /** (term, doc_id, tf, dl) for one batch of documents: one explode,
-    * one (doc, term) shuffle, dl joined back onto every posting.
+  /** (doc_id, term, tf) and (doc_id, dl) for one batch of documents:
+    * one explode, one (doc, term) shuffle, dl derived from tf. `docId`
+    * must be named `doc_id`. Shared by [[postings]] and the in-query
+    * BM25 kernels, so both tokenize and count the same way.
     */
+  private[graft] def termFreqs(docs: DataFrame, docId: Column,
+                               text: Column): (DataFrame, DataFrame) = {
+    val tf = docs.select(docId, explode(TextAnalysis.tokens(text)).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    (tf, tf.groupBy("doc_id").agg(sum(col("tf")).cast("double").as("dl")))
+  }
+
+  /** (term, doc_id, tf, dl): dl joined back onto every posting. */
   private def postings(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame = {
-    val tf = docs
-      .select(col(idCol).as("doc_id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).cast("double").as("dl"))
+    val (tf, dl) = termFreqs(docs, col(idCol).as("doc_id"), col(textCol))
     tf.join(dl, "doc_id").select("term", "doc_id", "tf", "dl")
   }
+
+  /** The Okapi BM25 contribution of one (doc, term) posting: k1 = 1.2,
+    * b = 0.75, the +1-smoothed idf. The ONE scoring formula of every
+    * BM25 path — [[search]], [[searchPerQuery]] and the in-query
+    * kernels. Constants are literals, never re-derived arithmetic (k1+1
+    * computed rounds differently from 2.2), matching the oracle SQL.
+    */
+  private[graft] def score(n: Column, df: Column, tf: Column, dl: Column,
+                           totalToks: Column): Column =
+    log((n - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)) *
+      (tf * lit(2.2)) /
+      (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / (totalToks / n)))
 
   /** Tokenize the corpus once and persist postings + global stats. */
   def build(spark: SparkSession, indexPath: String, docs: DataFrame,
@@ -899,13 +917,8 @@ object Bm25Index {
     val df = probed.groupBy("term")
       .agg(count(lit(1)).cast("double").as("df"))
     val contrib = probed.join(broadcast(df), "term")
-      .withColumn("c",
-        log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5)) + lit(1.0)) *
-          (col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) *
-            (lit(0.25) + lit(0.75) * col("dl") /
-              (lit(totalToks.toDouble) / lit(nDocs.toDouble)))))
+      .withColumn("c", score(lit(nDocs.toDouble), col("df"), col("tf"),
+        col("dl"), lit(totalToks.toDouble)))
     val kept = allowed.fold(contrib) { a =>
       contrib.join(a.select(col(a.columns.head).as("doc_id")),
         Seq("doc_id"), "left_semi")
@@ -971,13 +984,8 @@ object Bm25Index {
       .agg(count(lit(1)).cast("double").as("df"))
     val contrib = probed.join(Pq.hintIfSmall(df, nPairs, Pq.TermRowBytes),
       "term")
-      .withColumn("c",
-        log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5)) + lit(1.0)) *
-          (col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) *
-            (lit(0.25) + lit(0.75) * col("dl") /
-              (lit(totalToks.toDouble) / lit(nDocs.toDouble)))))
+      .withColumn("c", score(lit(nDocs.toDouble), col("df"), col("tf"),
+        col("dl"), lit(totalToks.toDouble)))
     val kept = allowed.fold(contrib) { a =>
       contrib.join(a.select(col(a.columns.head).as("doc_id")),
         Seq("doc_id"), "left_semi")

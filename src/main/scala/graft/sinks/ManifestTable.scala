@@ -508,7 +508,9 @@ object ManifestTable {
     * queries still compute from the postings/lists data every run, and
     * any commit that rewrites the dir changes the signature, so the
     * entry self-invalidates. Superseded signatures of the same dir are
-    * evicted on sight.
+    * evicted on sight. A miss re-lists after the load: a commit that
+    * landed during it may have fed the value either state, so it is
+    * returned but memoized only when the signature is unchanged.
     */
   private[graft] def memoDir[V](cache: graft.sources.LruCache[(String, String), V],
                                 spark: SparkSession, dir: String)
@@ -517,8 +519,10 @@ object ManifestTable {
       case Some(sig) =>
         cache.get((dir, sig)).getOrElse {
           val v = load
-          cache.put((dir, sig), v)
-          cache.removeIf(k => k._1 == dir && k._2 != sig)
+          if (dirSignature(spark, dir).contains(sig)) {
+            cache.put((dir, sig), v)
+            cache.removeIf(k => k._1 == dir && k._2 != sig)
+          }
           v
         }
       case None => load

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Bm25Index, Ivf, IvfIndex, PqIndex}
@@ -852,9 +852,7 @@ object SearchRelations {
     val extra = if (tRank.columns.contains("snippet")) Seq("snippet")
                 else Nil
     tRank.join(vRank, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK) + col("rank_text")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)), 6))
+      .withColumn("rrf", rrfScore(rrfK))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("rrf"), col("doc_id")))
         .cast("long"))
@@ -862,6 +860,16 @@ object SearchRelations {
       .select(Seq("query_id", "doc_id", "rank_text", "rank_vec", "rrf",
         "rank") ++ extra map col: _*)
   }
+
+  /** The RRF score of one fused row: Σ_lists 1/(rrfK + rank), rounded
+    * to 6 places, over the `rank_text` and `rank_vec` columns of a
+    * full-outer join; a list the doc is absent from (NULL rank) adds
+    * nothing. Two IEEE divides and one add in fixed order, so the
+    * oracle's `round(COALESCE(1.0 / (60 + rank), 0) + …, 6)` matches.
+    */
+  private[graft] def rrfScore(rrfK: Int): Column = round(
+    coalesce(lit(1.0) / (lit(rrfK) + col("rank_text")), lit(0.0)) +
+      coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)), 6)
 
   private def requireKind(spark: SparkSession, idx: String,
                           kind: String): Map[String, String] = {

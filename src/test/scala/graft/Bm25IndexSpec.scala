@@ -40,6 +40,19 @@ class Bm25IndexSpec extends SparkSpec {
     assert(persisted == inQuery,
       "persisted path must reproduce the oracled kernel exactly")
 
+    // per-query input: the rank-1..6 split term sets through the built
+    // index reproduce the in-query per-query kernel's top-20 per query
+    val (cands, qt) = ExtendedQueries.bm25PerQueryParts(docs)
+    val perQuery = Bm25Index.searchPerQuery(spark, path, qt, k = 20)
+      .select("query_id", "doc_id", "score")
+      .as[(Long, Long, Double)].collect().toSet
+    val inQueryPerQuery = cands.select("query_id", "doc_id", "score")
+      .as[(Long, Long, Double)].collect().toSet
+    assert(perQuery.size == 40 && perQuery.map(_._1) == Set(0L, 1L),
+      s"two queries × top-20 expected: ${perQuery.size} rows")
+    assert(perQuery == inQueryPerQuery,
+      "persisted searchPerQuery must reproduce the in-query per-query kernel")
+
     // IO scope: 3 terms hash into at most 3 of 8 buckets — the probed
     // read must not open every postings file
     val probed = ManifestTable.readBuckets(spark, s"$path/postings", qterms)

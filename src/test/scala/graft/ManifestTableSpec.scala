@@ -740,4 +740,22 @@ class ManifestTableSpec extends SparkSpec {
     // and version-1 snapshot reads still resolve
     assert(ManifestTable.readVersion(spark, path, 1).count() == 20)
   }
+
+  test("memoDir: a load that races a change to the dir is returned but not memoized") {
+    val dir = Files.createTempDirectory("graft-memo").toString
+    Files.writeString(java.nio.file.Paths.get(dir, "a"), "1")
+    val cache = new graft.sources.LruCache[(String, String), Int](8)
+    var loads = 0
+    def read(change: Boolean): Int = ManifestTable.memoDir(cache, spark, dir) {
+      loads += 1
+      if (change)
+        Files.writeString(java.nio.file.Paths.get(dir, s"f$loads"), "x")
+      loads
+    }
+    assert(read(change = true) == 1, "the loaded value is returned")
+    assert(cache.size == 0, "a value loaded across a dir change is not put")
+    assert(read(change = false) == 2, "the next call reloads")
+    assert(read(change = false) == 2, "an undisturbed load is memoized")
+    assert(loads == 2)
+  }
 }
