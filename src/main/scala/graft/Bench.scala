@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds over the
   * SPARK_GRAFT_SF_DIR fixtures.
   *
@@ -55,32 +53,61 @@ object Bench {
     (load, jvms)
   }
 
-  private def envJson(start: (Seq[Double], Int),
-                      end: (Seq[Double], Int)): String = {
-    val loaded = start._1.headOption.exists(_ > 0.5)
-    s"""{"load_start":${start._1.mkString("[", ",", "]")},""" +
-      s""""jvms_start":${start._2},""" +
-      s""""load_end":${end._1.mkString("[", ",", "]")},""" +
-      s""""jvms_end":${end._2},"loaded":$loaded}"""
+  /** The bench's one JSON line. `passes` holds both measured passes per
+    * query (Right = seconds, Left = failure message); `work` is the run
+    * meter's tally per `p<pass>:<query>` tag. Assembled by Jackson, so
+    * any message — Spark's carry newlines and the analyzed plan — stays
+    * one parseable line.
+    */
+  private[graft] def resultLine(names: Seq[String],
+      passes: Seq[Map[String, Either[String, Double]]],
+      work: String => RunMeter.Work, envStart: (Seq[Double], Int),
+      envEnd: (Seq[Double], Int), sf: String): String = {
+    import scala.collection.immutable.ListMap
+    val sorted = names.sorted
+    def times(k: String) = passes.map(_(k)).collect { case Right(t) => t }
+    // a failed pass records NO timing (min over failures would report a
+    // fast crash as a fast query); failed queries are listed separately
+    val results = ListMap.from(sorted.flatMap { k =>
+      times(k).minOption.map(k -> _)
+    })
+    // a query that succeeded in ONE pass but failed the other is flaky —
+    // its single timing is reported, but min-of-two must not silently
+    // absorb the failure (a fast crash is not a fast query)
+    val failures = sorted.map(k => k -> passes.map(_(k)).collect { case Left(m) => m })
+    val failed = failures.collect { case (k, fs) if fs.size == passes.size => k }
+    val flaky = ListMap.from(failures.collect {
+      case (k, fs) if fs.nonEmpty && fs.size < passes.size => k -> fs.head
+    })
+    // scheduler shape of the pass each query's reported min came from
+    val minWork = results.map { case (k, t) =>
+      k -> work(s"p${passes.indexWhere(_(k) == Right(t)) + 1}:$k")
+    }.filter(_._2.jobs > 0)
+    val env = ListMap("load_start" -> envStart._1, "jvms_start" -> envStart._2,
+      "load_end" -> envEnd._1, "jvms_end" -> envEnd._2,
+      "loaded" -> envStart._1.headOption.exists(_ > 0.5))
+    json.writeValueAsString(ListMap(
+      "metric" -> "total", "value" -> results.values.sum, "unit" -> "sec",
+      "queries" -> results,
+      // both raw pass timings per query, alongside the min the headline
+      // uses: a tight [2.2,2.3] and a noisy [2.2,3.1] report the same
+      // min but mean different things — three host-variance false
+      // alarms in four rounds (r6/r8/r9) were diagnosable only by
+      // rerunning; with the spread in the artifact they self-diagnose
+      "passes" -> ListMap.from(sorted.map(k => k -> times(k)).filter(_._2.nonEmpty)),
+      "errors" -> failed, "flaky" -> flaky,
+      "stage_jobs" -> minWork.map { case (k, w) => k -> w.jobs },
+      "task_sec" -> minWork.map { case (k, w) => k -> w.taskMs / 1e3 },
+      "env" -> env, "sf" -> sf))
   }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
   def main(args: Array[String]): Unit = {
     val envStart = envStamp()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // engine defaults (cached-plan AQE) come from SessionDefaults so
-    // Bench and Verify run the SAME session shape (ADVICE r19)
-    val spark = SessionDefaults.configure(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable checkpoint dir — same setup as Verify, so the benched
-    // dedup_clusters runs the branch a real cluster would
-    spark.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft-checkpoints")
+    val sfDir = SessionDefaults.sfDir
+    val spark = SessionDefaults.local(SessionDefaults.cpus)
 
     // optional arg: regex filter over query names (local profiling; the
     // driver always runs argless = the full set)
@@ -92,131 +119,36 @@ object Bench {
     // the core-scaling probe can tell "serial tiny-SF workload" (flat
     // c8/c32 ratios, parallelism ≈ 1) from "cores ignored", and
     // stage-count reduction — the real 100 TB lever — becomes a
-    // tracked number. Attribution is by job DESCRIPTION tag (set per
-    // execute, guide §1.5), so async listener delivery can never
-    // credit a query with a neighbor's tail events; timings are
-    // untouched (no per-query bus settling).
-    val jobsByTag =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val taskMsByTag =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val stageTag = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val tag = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (tag.nonEmpty) {
-          jobsByTag.computeIfAbsent(tag,
-            _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-          j.stageInfos.foreach(si => stageTag.put(si.stageId, tag))
-        }
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val tag = stageTag.get(t.stageId)
-        if (tag != null && t.taskMetrics != null)
-          taskMsByTag.computeIfAbsent(tag,
-              _ => new java.util.concurrent.atomic.AtomicLong)
-            .addAndGet(t.taskMetrics.executorRunTime)
-      }
-    })
-
-    def execute(name: String, tag: String): Unit = {
-      spark.sparkContext.setJobDescription(tag)
-      try SparkEntry.benchQueries(name)(spark, sfDir)
+    // tracked number. One tag per query and pass; the meter settles
+    // once after the run, so timings carry no per-query bus wait.
+    val meter = new RunMeter(spark)
+    def execute(name: String): Unit =
+      SparkEntry.benchQueries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-      finally spark.sparkContext.setJobDescription(null)
-    }
 
     // warmup: every plan once, uncounted
-    queryNames
-      .foreach { q => try execute(q, s"warm:$q") catch { case _: Throwable => () } }
+    queryNames.foreach { q => try execute(q) catch { case _: Throwable => () } }
 
-    // a failed pass records NO timing (min over failures would report a
-    // fast crash as a fast query); failed queries are listed separately
     def measuredPass(pass: Int): Map[String, Either[String, Double]] =
       queryNames.map { name =>
         val t0 = System.nanoTime()
         try {
-          execute(name, s"p$pass:$name")
+          meter.run(s"p$pass:$name")(execute(name))
           name -> Right((System.nanoTime() - t0) / 1e9)
         } catch {
           case e: Throwable => name -> Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }.toMap
 
-    val (p1, p2) = (measuredPass(1), measuredPass(2))
-    val results = queryNames.flatMap { k =>
-      (p1(k), p2(k)) match {
-        case (Right(a), Right(b)) => Some(k -> math.min(a, b))
-        case (Right(a), Left(_))  => Some(k -> a)
-        case (Left(_), Right(b))  => Some(k -> b)
-        case (Left(_), Left(_))   => None
-      }
-    }.toMap
-    val failed = queryNames
-      .filter(k => p1(k).isLeft && p2(k).isLeft).toSeq.sorted
-    // a query that succeeded in ONE pass but failed the other is flaky —
-    // its single timing is reported, but min-of-two must not silently
-    // absorb the failure (a fast crash is not a fast query)
-    val flaky = queryNames
-      .filter(k => p1(k).isLeft != p2(k).isLeft).toSeq.sorted
-      .map { k =>
-        val msg = (p1(k).left.toSeq ++ p2(k).left.toSeq).head
-        s"\"" + k + "\":\"" + msg.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // both raw pass timings per query, alongside the min the headline
-    // uses: a tight [2.2,2.3] and a noisy [2.2,3.1] report the same min
-    // but mean different things — three host-variance false alarms in
-    // four rounds (r6/r8/r9 postmortems) were diagnosable only by
-    // rerunning; with the spread in the artifact they self-diagnose
-    val passes = queryNames.flatMap { k =>
-      val ts = Seq(p1(k), p2(k)).collect { case Right(t) => t }
-      if (ts.isEmpty) None
-      else Some(s"\"" + k + "\":" + ts.mkString("[", ",", "]"))
-    }.mkString("{", ",", "}")
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // one bus settle for the WHOLE run (listener delivery is async);
-    // per-query settling would inflate every timing by the wait. Poll
-    // the counters until two reads 100 ms apart agree, at most 1 s
-    def counts(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      (jobsByTag.values.asScala.map(_.get).sum,
-        taskMsByTag.values.asScala.map(_.get).sum)
-    }
-    val settleBy = System.nanoTime() + 1000L * 1000 * 1000
-    var last = (-1L, -1L)
-    var cur = counts()
-    while (cur != last && System.nanoTime() < settleBy) {
-      last = cur
-      Thread.sleep(100)
-      cur = counts()
-    }
-    // scheduler shape of the pass each query's reported min came from
-    def minTag(k: String): String = (p1(k), p2(k)) match {
-      case (Right(a), Right(b)) => if (a <= b) s"p1:$k" else s"p2:$k"
-      case (Right(_), _) => s"p1:$k"
-      case _ => s"p2:$k"
-    }
-    val stageJobs = results.keys.toSeq.sorted.flatMap { k =>
-      Option(jobsByTag.get(minTag(k))).map(v => s"\"" + k + "\":" + v.get)
-    }.mkString("{", ",", "}")
-    val taskSec = results.keys.toSeq.sorted.flatMap { k =>
-      Option(taskMsByTag.get(minTag(k))).map(v =>
-        s"\"" + k + "\":" + v.get / 1e3)
-    }.mkString("{", ",", "}")
-    val env = envJson(envStart, envStamp())
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"errors":$errs,"flaky":${flaky.mkString("{", ",", "}")},"stage_jobs":$stageJobs,"task_sec":$taskSec,"env":$env,"sf":"$sfDir"}"""
-    println(json)
+    val passes = Seq(measuredPass(1), measuredPass(2))
+    meter.settle()
+    val line = resultLine(queryNames, passes, meter.work, envStart,
+      envStamp(), sfDir)
+    println(line)
     // stdout of a driver-run sbt process gets tail-truncated (~11 of 73
     // per-query timings were lost in round 3) — the file is the durable,
     // machine-readable copy for round-over-round regression tracking
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), json + "\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     spark.stop()
   }
 }

@@ -14,33 +14,41 @@ import graft.functions._
   *    `--conf spark.sql.extensions=graft.GraftExtensions`;
   *  - existing session: `GraftExtensions.register(spark)` (temp
   *    functions).
+  *
+  * Idempotent per builder, like Pathling's `SqlStrategy.setup`: a
+  * builder extended twice (`SessionDefaults.configure` on a builder that
+  * already carries the extension) must not stack a second parser.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.builders.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
-        builder))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    if (GraftExtensions.applied.put(ext, true) == null) {
+      GraftExtensions.builders.foreach { case (name, builder) =>
+        ext.injectFunction((
+          FunctionIdentifier(name),
+          new ExpressionInfo("graft", name),
+          builder))
+      }
+      // composable search: table-valued functions that plant the
+      // persisted-index search composition as a RELATION inside the
+      // calling query's plan (join/filter/aggregate in one Catalyst
+      // plan), vs the GRAFT SEARCH verbs' driver-materialized rows
+      GraftExtensions.tableBuilders.foreach { case (name, builder) =>
+        ext.injectTableFunction((
+          FunctionIdentifier(name),
+          new ExpressionInfo("graft", name),
+          builder))
+      }
+      // maintenance SQL (GRAFT OPTIMIZE/VACUUM/REBUCKET/ADD COLUMNS) —
+      // prefix-gated, everything else delegates to Spark's parser
+      ext.injectParser((_, delegate) =>
+        new graft.sources.GraftSqlParser(delegate))
     }
-    // composable search: table-valued functions that plant the
-    // persisted-index search composition as a RELATION inside the
-    // calling query's plan (join/filter/aggregate in one Catalyst
-    // plan), vs the GRAFT SEARCH verbs' driver-materialized rows
-    GraftExtensions.tableBuilders.foreach { case (name, builder) =>
-      ext.injectTableFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
-        builder))
-    }
-    // maintenance SQL (GRAFT OPTIMIZE/VACUUM/REBUCKET/ADD COLUMNS) —
-    // prefix-gated, everything else delegates to Spark's parser
-    ext.injectParser((_, delegate) =>
-      new graft.sources.GraftSqlParser(delegate))
-  }
 }
 
 object GraftExtensions {
+
+  private val applied = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean]())
 
   private def intArg(e: Expression, name: String): Int = e match {
     case Literal(v: Int, _) => v

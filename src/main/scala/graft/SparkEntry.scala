@@ -34,7 +34,7 @@ object SparkEntry {
     * the fingerprint-keyed narrow-shuffle shapes (engine-internal hash
     * keys aren't portable SQL), the sketch-only ANALYZE leg, and the
     * manifest point-lookup latency probe (side-effecting fixture
-    * build). Bench and DumpPlans run this set; Verify runs only the
+    * build). Bench and `tools.Probe` run this set; Verify runs only the
     * oracled `queries`.
     */
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,11 @@ object Verify {
     // optional third arg: regex filter over query names (local debugging;
     // the driver always runs the full set)
     val nameFilter = if (args.length > 2) args(2).r else ".*".r
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SessionDefaults: the gate must verify the SAME session config the
     // bench measures (ADVICE r19 — the cached-plan AQE conf was
     // bench-only, so a partitioning-sensitive difference would never
     // have been oracle-checked)
-    val spark = SessionDefaults.configure(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable checkpoint dir (local FS here; HDFS/object store on a real
-    // cluster) so iterative ops (Dedup.connectedComponents) take their
-    // fault-tolerant branch in gate runs, not the executor-local fallback
-    spark.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft-checkpoints")
+    val spark = SessionDefaults.local(SessionDefaults.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => nameFilter.matches(q._1)).foreach { case (name, fn) =>
       val t0 = System.nanoTime()

@@ -3672,8 +3672,8 @@ s$r AS MATERIALIZED (SELECT word, min(cnt) AS cnt,
     * needs recall where the top 20 live, and at sf0.1 the measured
     * 20th-ranked pair has J=0.989 — 16 bands of r=4 (S-curve threshold
     * ≈0.5, recall ≈1 at J≥0.8) finds the identical top 20 from 1,527
-    * candidates where the r=2 banding streamed 407,427 (measured both,
-    * `tools/Profile.scala`). The 267× candidate cut is what retired the
+    * candidates where the r=2 banding streamed 407,427 (measured
+    * both). The 267× candidate cut is what retired the
     * r06 bench-variance exposure: 400k est-verify rows carrying two
     * 64-slot signature arrays apiece were pure allocation churn whose
     * runtime was hostage to machine load. The oracle mirrors the same
@@ -4988,7 +4988,7 @@ s$r AS MATERIALIZED (SELECT word, min(cnt) AS cnt,
     * claim is that this costs the SAME CLASS as the unmatched twin
     * (two broadcast attribute joins over already-bounded candidates);
     * this entry carries the number next to `bm25_batch_per_query`'s —
-    * the WorkMeter bound (SearchTvfSpec) carries the proof.
+    * the RunMeter bound (SearchTvfSpec) carries the proof.
     */
   def bm25BatchMatchedLowcard(spark: SparkSession, dir: String): DataFrame = {
     val (idx, qTab) = benchMatchedFixture(spark, dir)

@@ -1340,7 +1340,7 @@ class ManifestIndexScan(path: String, m: ManifestTable.Manifest,
           ManifestIndexTable.deepNullable(m.schema),
           zoneFilters.toSeq)),
       // `vectorized=false` forces the Group-API row fallback — kept
-      // selectable so its decode tax stays measurable (ProfileInc) and
+      // selectable so its decode tax stays measurable (`Probe meter`) and
       // the fallback path stays tested, not bit-rotting until the first
       // non-vectorizable schema needs it. Equality-delete tombstones on
       // any read partition force the row path scan-wide (Spark requires

@@ -51,10 +51,10 @@ class ClusteringSpec extends SparkSpec {
     // — 0 planned parquet scans), leaving only the final assignment pass
     // as a real scan. The pre-fix loop planned updates+2 = 6 scans here.
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val scans = WorkMeter.plannedParquetScans(spark) {
+    val scans = RunMeter.measure(spark) {
       Clustering.kmeansSq8(emb, "vec_id", "embedding", k = 4, updates = 4)
         .write.mode("overwrite").format("noop").save()
-    }
+    }.parquetScans
     assert(scans <= 2,
       s"kmeansSq8(updates=4) planned $scans parquet scans — the quantized " +
         "projection must be persisted through the Lloyd loop, not " +

@@ -20,7 +20,7 @@ import graft.queries.ExtendedQueries
   * partial aggregation.
   *
   * THE GUARD IS A WORK METRIC, NOT A CLOCK. The assertions compare total
-  * shuffle records moved (read + written, via [[WorkMeter]]'s job-group
+  * shuffle records moved (read + written, via [[RunMeter]]'s job-group
   * -scoped SparkListener): the degenerate corpus has 11× the rows of the
   * clean one, so a working guard keeps the degenerate run within a
   * small row-scaled multiple of clean (measured 1.1–10× across the six
@@ -74,17 +74,17 @@ class DegenerateCorpusSpec extends SparkSpec {
     query(spark, cleanDir).collect()
     query(spark, degenerateDir).collect()
     val t0 = System.nanoTime()
-    val clean = WorkMeter.measure(spark)(query(spark, cleanDir).collect())
+    val clean = RunMeter.measure(spark)(query(spark, cleanDir).collect())
     val t1 = System.nanoTime()
-    val degenerate = WorkMeter.measure(spark)(query(spark, degenerateDir).collect())
+    val degenerate = RunMeter.measure(spark)(query(spark, degenerateDir).collect())
     val t2 = System.nanoTime()
-    val bound = BoundFactor * clean.total
-    info(f"$name: clean ${clean.total}%,d shuffle records (${(t1 - t0) / 1e9}%.2fs), " +
-      f"degenerate ${degenerate.total}%,d (${(t2 - t1) / 1e9}%.2fs) — " +
-      f"ratio ${degenerate.total.toDouble / clean.total}%.1fx, bound ${BoundFactor}x")
-    assert(degenerate.total <= bound,
-      s"$name degenerate run moved ${degenerate.total} shuffle records vs " +
-        s"clean ${clean.total} (> ${BoundFactor}x) — a quadratic guard " +
+    val bound = BoundFactor * clean.shuffleRecords
+    info(f"$name: clean ${clean.shuffleRecords}%,d shuffle records (${(t1 - t0) / 1e9}%.2fs), " +
+      f"degenerate ${degenerate.shuffleRecords}%,d (${(t2 - t1) / 1e9}%.2fs) — " +
+      f"ratio ${degenerate.shuffleRecords.toDouble / clean.shuffleRecords}%.1fx, bound ${BoundFactor}x")
+    assert(degenerate.shuffleRecords <= bound,
+      s"$name degenerate run moved ${degenerate.shuffleRecords} shuffle records vs " +
+        s"clean ${clean.shuffleRecords} (> ${BoundFactor}x) — a quadratic guard " +
         "(mega-bucket star / partial-agg absorption) regressed")
   }
 
@@ -136,19 +136,19 @@ class DegenerateCorpusSpec extends SparkSpec {
         shingleN = 2, numHashes = 64, bands = 4)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     prepared.count() // materialize: both runs below read the same cache
-    def pairsWork(cap: Int): WorkMeter.Work = WorkMeter.measure(spark) {
+    def pairsWork(cap: Int): RunMeter.Work = RunMeter.measure(spark) {
       Dedup.candidatePairs(prepared, "id", "bands", maxBucketSize = cap)
         .write.mode("overwrite").format("noop").save()
     }
     val guarded = pairsWork(1024)
     val unguarded = pairsWork(Int.MaxValue)
     prepared.unpersist(blocking = false)
-    info(f"guarded ${guarded.total}%,d shuffle records, " +
-      f"unguarded ${unguarded.total}%,d — " +
-      f"ratio ${unguarded.total.toDouble / guarded.total}%.0fx")
-    assert(unguarded.total > BoundFactor * guarded.total,
-      s"planted quadratic moved only ${unguarded.total} shuffle records vs " +
-        s"guarded ${guarded.total} — below the ${BoundFactor}x rehearsal " +
+    info(f"guarded ${guarded.shuffleRecords}%,d shuffle records, " +
+      f"unguarded ${unguarded.shuffleRecords}%,d — " +
+      f"ratio ${unguarded.shuffleRecords.toDouble / guarded.shuffleRecords}%.0fx")
+    assert(unguarded.shuffleRecords > BoundFactor * guarded.shuffleRecords,
+      s"planted quadratic moved only ${unguarded.shuffleRecords} shuffle records vs " +
+        s"guarded ${guarded.shuffleRecords} — below the ${BoundFactor}x rehearsal " +
         "bound, so the work metric can no longer detect the regression " +
         "class this suite guards")
   }

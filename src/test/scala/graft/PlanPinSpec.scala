@@ -1,27 +1,24 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.tools.DumpPlans
+import graft.tools.Probe
 
 /** Staleness guard for the committed plan pins: every headline plan is
   * REGENERATED here and its invariant-op histogram (Exchange count, scan
   * multiplicity, join strategies, row-multiplying ops — see
-  * `DumpPlans.invariantOps`) diffed against the parsed PLANS.md. A code
+  * `Probe.invariantOps`) diffed against the parsed PLANS.md. A code
   * change that silently alters a headline plan's scale shape fails
-  * `sbt test` until `DumpPlans` is re-run and the diff reviewed — the
+  * `sbt test` until `Probe plans` is re-run and the diff reviewed — the
   * same role CoverageSpec's analysis guard plays for schemas. (Added
   * after a round-9 review found a hand-written plan pin stale following
   * a rewrite of the query it pinned.)
   *
-  * Plans are built over the SAME dir and session shape DumpPlans uses
-  * (sf0.01, 4 shuffle partitions): file statistics feed broadcast
-  * decisions, so regenerating at a different scale could legitimately
-  * differ — that would be a false alarm, not a drift.
+  * Plans are built over the SAME dir and width `Probe plans` uses
+  * (`Probe.PinDir`, `Probe.PinWidth` — the test session's width).
   */
 class PlanPinSpec extends SparkSpec {
 
-  private val plansPath = Paths.get("PLANS.md")
-  private val planDir = "/root/testdata/sf0.01"
+  private val plansPath = Paths.get(Probe.PlansFile)
 
   /** name → plan text, parsed from PLANS.md's `## name` + fenced block. */
   private lazy val committed: Map[String, String] = {
@@ -31,24 +28,23 @@ class PlanPinSpec extends SparkSpec {
   }
 
   test("PLANS.md sections cover exactly the headline set") {
-    assert(committed.keySet === DumpPlans.headline.toSet,
-      s"missing from PLANS.md: ${DumpPlans.headline.toSet -- committed.keySet}; " +
-        s"stale sections: ${committed.keySet -- DumpPlans.headline.toSet} — " +
-        "re-run graft.tools.DumpPlans")
+    assert(committed.keySet === Probe.headline.toSet,
+      s"missing from PLANS.md: ${Probe.headline.toSet -- committed.keySet}; " +
+        s"stale sections: ${committed.keySet -- Probe.headline.toSet} — " +
+        "re-run graft.tools.Probe plans")
   }
 
   test("committed plan pins match regenerated plans (invariant ops)") {
-    val drifts = DumpPlans.headline.flatMap { name =>
-      val df = SparkEntry.benchQueries(name)(spark, planDir)
-      val fresh = DumpPlans.planSignature(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      val pinned = DumpPlans.planSignature(committed.getOrElse(name, ""))
+    val drifts = Probe.headline.flatMap { name =>
+      val df = SparkEntry.benchQueries(name)(spark, Probe.PinDir)
+      val fresh = Probe.planSignature(Probe.formatted(df))
+      val pinned = Probe.planSignature(committed.getOrElse(name, ""))
       if (fresh != pinned)
         Some(s"$name: pinned=$pinned fresh=$fresh")
       else None
     }
     assert(drifts.isEmpty,
       "plan drift vs PLANS.md — review the change, then re-run " +
-        s"graft.tools.DumpPlans to refresh the pins:\n${drifts.mkString("\n")}")
+        s"graft.tools.Probe plans to refresh the pins:\n${drifts.mkString("\n")}")
   }
 }

@@ -52,10 +52,10 @@ class PqSpec extends SparkSpec {
   test("codebook training reads a persisted projection: planned parquet scans don't grow with updates") {
     // init + 3 updates must all read the cached quantized projection —
     // the pre-fix loop planned updates+1 = 4 corpus scans here
-    val scans = WorkMeter.plannedParquetScans(spark) {
+    val scans = RunMeter.measure(spark) {
       Pq.train(fixture, "vec_id", "embedding", dim = 64, m = 8, k = 16,
         updates = 3)
-    }
+    }.parquetScans
     assert(scans <= 1,
       s"Pq.train(updates=3) planned $scans parquet scans — the quantized " +
         "projection must be persisted through the update loop")

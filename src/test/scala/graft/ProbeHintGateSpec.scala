@@ -276,7 +276,7 @@ class ProbeHintGateSpec extends SparkSpec {
       Bm25Index.searchPerQuery(spark, tIdx, qt, k = 5,
         pairBound = 2L * nQ).collect()
     }
-    def scansFor(nQ: Int): Int = WorkMeter.plannedParquetScans(spark)(search(nQ))
+    def scansFor(nQ: Int): Long = RunMeter.measure(spark)(search(nQ)).parquetScans
     // the first search pays one extra scan to fill the `_stats` memo
     // (Bm25Index.readStats); warm it outside the measured calls so both
     // see the same memo state

@@ -50,17 +50,17 @@ class SearchTvfSpec extends SparkSpec {
     val (corpus, idx) = textFixture
     val searchSql =
       s"SELECT * FROM graft_search_text('$idx', 'alpha beta tail1', 5)"
-    val alone = WorkMeter.plannedParquetScans(spark) {
+    val alone = RunMeter.measure(spark) {
       spark.sql(searchSql).collect()
-    }
+    }.parquetScans
     ManifestTable.read(spark, corpus).createOrReplaceTempView("tvf_corpus")
-    val joined = WorkMeter.plannedParquetScans(spark) {
+    val joined = RunMeter.measure(spark) {
       spark.sql(
         s"""SELECT s.doc_id, d.text, s.score
            |FROM graft_search_text('$idx', 'alpha beta tail1', 5) s
            |JOIN tvf_corpus d USING (doc_id)
            |WHERE s.score > 0""".stripMargin).collect()
-    }
+    }.parquetScans
     assert(joined == alone + 1,
       s"the corpus join must add exactly ONE planned scan to the search " +
         s"plan (search=$alone, joined=$joined) — more means the search " +
@@ -642,23 +642,23 @@ class SearchTvfSpec extends SparkSpec {
     // allowed.count() — a full predicate-column scan per plan build at
     // 100 TB (VERDICT r16 next #5). Now the first build pays it and
     // caches under (source path, head snapshot version, predicate)
-    val first = WorkMeter.jobsStarted(spark) { build() }
+    val first = RunMeter.measure(spark) { build() }.jobs
     assert(SearchRelations.cachedSelectivities(vcorpus) >= 1,
       "first filtered-AUTO build must populate the selectivity cache")
-    val second = WorkMeter.jobsStarted(spark) { build() }
+    val second = RunMeter.measure(spark) { build() }.jobs
     assert(second < first,
       s"repeat build at the same snapshot must skip the count job: " +
         s"first=$first jobs, second=$second")
     // steady state: a third build schedules exactly the second's jobs
-    val third = WorkMeter.jobsStarted(spark) { build() }
+    val third = RunMeter.measure(spark) { build() }.jobs
     assert(third == second,
       s"steady-state builds must be job-stable: second=$second third=$third")
     // a different predicate is a different key — pays its own count
-    val otherPred = WorkMeter.jobsStarted(spark) {
+    val otherPred = RunMeter.measure(spark) {
       SearchRelations.vector(spark, vIdx, qtab, k = 5,
         nProbe = SearchRelations.ProbeAuto, refine = false,
         refineFactor = 4, filterPred = Some("label = 0"))
-    }
+    }.jobs
     assert(otherPred > second,
       s"a new predicate must pay its own count: other=$otherPred vs $second")
     assert(SearchRelations.cachedSelectivities(vcorpus) >= 2)
@@ -667,7 +667,7 @@ class SearchTvfSpec extends SparkSpec {
     ManifestTable.append(spark,
       vcorpus, Seq((100L, Array.fill(16)(0.1f), 1))
         .toDF("vec_id", "embedding", "label"), "vec_id")
-    val afterCommit = WorkMeter.jobsStarted(spark) { build() }
+    val afterCommit = RunMeter.measure(spark) { build() }.jobs
     assert(afterCommit > second,
       s"a new snapshot must re-measure selectivity: after=$afterCommit " +
         s"vs steady $second")
@@ -1220,12 +1220,12 @@ class SearchTvfSpec extends SparkSpec {
     val prev = keys.map(k => k -> spark.conf.getOption(k))
     keys.foreach(k => spark.conf.set(k, "-1"))
     try {
-      val base = WorkMeter.measure(spark) { run(withMatch = false) }
-      val matched = WorkMeter.measure(spark) { run(withMatch = true) }
-      val extra = matched.total - base.total
+      val base = RunMeter.measure(spark) { run(withMatch = false) }
+      val matched = RunMeter.measure(spark) { run(withMatch = true) }
+      val extra = matched.shuffleRecords - base.shuffleRecords
       assert(extra < 10L * D,
         s"MATCH must add O(corpus + candidates) shuffle records, got " +
-          s"extra=$extra over base=${base.total} (pairs shape would " +
+          s"extra=$extra over base=${base.shuffleRecords} (pairs shape would " +
           s"add >= ${2L * Q * D})")
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -1292,11 +1292,11 @@ class SearchTvfSpec extends SparkSpec {
         s"probe: $fixed")
 
     // repeat plan builds at the same snapshots skip the count job
-    val first = WorkMeter.jobsStarted(spark) { build(SearchRelations.ProbeAuto) }
-    val second = WorkMeter.jobsStarted(spark) { build(SearchRelations.ProbeAuto) }
+    val first = RunMeter.measure(spark) { build(SearchRelations.ProbeAuto) }.jobs
+    val second = RunMeter.measure(spark) { build(SearchRelations.ProbeAuto) }.jobs
     assert(second <= first,
       s"repeat MATCH-AUTO build must not add jobs: first=$first second=$second")
-    val third = WorkMeter.jobsStarted(spark) { build(SearchRelations.ProbeAuto) }
+    val third = RunMeter.measure(spark) { build(SearchRelations.ProbeAuto) }.jobs
     assert(third == second,
       s"steady-state MATCH-AUTO builds must be job-stable: $second vs $third")
   }
@@ -1536,7 +1536,7 @@ class SearchTvfSpec extends SparkSpec {
 
     // batch 1 pays the one corpus groupBy that fills the counts cache:
     // its plan-build jobs read the whole 80-row corpus
-    val firstIn = WorkMeter.inputRecords(spark) { build() }
+    val firstIn = RunMeter.measure(spark) { build() }.inputRecords
     assert(firstIn >= 80,
       s"the FIRST batch pays the per-value corpus count: read $firstIn")
     assert(SearchRelations.cachedMatchCounts(vcorpus) == 1,
@@ -1550,7 +1550,7 @@ class SearchTvfSpec extends SparkSpec {
     ManifestTable.append(spark, qtab,
       Seq((4L, vecs(4)._2, "zzz", "bb"))
         .toDF("vec_id", "embedding", "qterms", "qlang"), "vec_id")
-    val secondIn = WorkMeter.inputRecords(spark) { build() }
+    val secondIn = RunMeter.measure(spark) { build() }.inputRecords
     assert(secondIn < 40,
       s"a new batch at the same corpus snapshot must not re-read the " +
         s"corpus (fused cache re-paid the full groupBy): read $secondIn")
@@ -1579,7 +1579,7 @@ class SearchTvfSpec extends SparkSpec {
       Seq((1000L, vecs(0)._2, "filler text", "bb"))
         .toDF("vec_id", "embedding", "text", "lang"), "vec_id")
     IvfIndex.sync(spark, vIdx, vcorpus, "vec_id", "embedding")
-    val thirdIn = WorkMeter.inputRecords(spark) { build() }
+    val thirdIn = RunMeter.measure(spark) { build() }.inputRecords
     assert(thirdIn >= 81 &&
       SearchRelations.cachedMatchCounts(vcorpus) == 1,
       s"a corpus commit must re-count once (81 rows) and supersede to " +
@@ -1617,7 +1617,7 @@ class SearchTvfSpec extends SparkSpec {
       def build() = SearchRelations.hybridPerQuery(spark, tIdx, vIdx,
         qtab, "qterms", k = 5, nProbe = SearchRelations.ProbeAuto,
         matchCols = Seq(graft.ops.MatchPair("qref", "ref")))
-      val firstIn = WorkMeter.inputRecords(spark) { build() }
+      val firstIn = RunMeter.measure(spark) { build() }.inputRecords
       assert(firstIn >= 80,
         s"the first batch prices the counts frame (one corpus scan): " +
           s"read $firstIn")
@@ -1637,7 +1637,7 @@ class SearchTvfSpec extends SparkSpec {
       ManifestTable.append(spark, qtab,
         Seq((4L, vecs(4)._2, "zzz", "r3"))
           .toDF("vec_id", "embedding", "qterms", "qref"), "vec_id")
-      val secondIn = WorkMeter.inputRecords(spark) { build() }
+      val secondIn = RunMeter.measure(spark) { build() }.inputRecords
       assert(secondIn >= 80,
         s"a new batch takes the bounded semi-join (one corpus scan): " +
           s"read $secondIn")
@@ -1646,7 +1646,7 @@ class SearchTvfSpec extends SparkSpec {
         "the sentinel is cached once, no frame ever retained")
       // the per-batch memo still holds: a REPEAT plan build of the
       // same batch runs no corpus job at all
-      val repeatIn = WorkMeter.inputRecords(spark) { build() }
+      val repeatIn = RunMeter.measure(spark) { build() }.inputRecords
       assert(repeatIn < 40,
         s"repeat plan builds of the same batch stay corpus-job-free: " +
           s"read $repeatIn")

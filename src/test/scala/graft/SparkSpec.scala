@@ -3,27 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: local[4], UTC, small shuffle width. */
+/** Shared session for all suites: the engine's own session shape
+  * (SessionDefaults) at the plan-pin width, so PlanPinSpec regenerates
+  * plans in the shape `tools.Probe plans` pinned them. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // mirror the gate harness: a reliable checkpoint dir, so suites
-    // exercise the same connectedComponents branch as Verify/Bench
-    s.sparkContext.setCheckpointDir(
-      s"${System.getProperty("java.io.tmpdir")}/graft-test-checkpoints")
-    s
-  }
+  lazy val session: SparkSession = SessionDefaults.local(tools.Probe.PinWidth)
 }
