@@ -55,8 +55,7 @@ final class RunMeter(spark: SparkSession) extends AutoCloseable {
         }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       Option(stageTally.get(s.stageInfo.stageId)).foreach { t =>
-        t.stages.put(s.stageInfo.stageId,
-          (s.stageInfo.name.takeWhile(_ != '\n').take(90), s.stageInfo.numTasks))
+        t.stages.put(s.stageInfo.stageId, (stageName(s.stageInfo), s.stageInfo.numTasks))
         events.increment()
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -132,8 +131,8 @@ object RunMeter {
     def shuffleRecords: Long = shuffleRecordsRead + shuffleRecordsWritten
   }
 
-  /** One completed stage: its name's first line, task count and summed
-    * executor run time. */
+  /** One completed stage: its name (see [[stageName]]), task count and
+    * summed executor run time. */
   final case class StageWork(id: Int, name: String, tasks: Int, taskMs: Long)
 
   /** Meter one body on a fresh meter: run, settle, read, detach. */
@@ -144,6 +143,14 @@ object RunMeter {
       meter.settle()
       meter.work("body")
     } finally meter.close()
+  }
+
+  /** The operators a stage ran, in RDD order (`Scan parquet >
+    * WholeStageCodegen (1) > Exchange`); the call-site line only for a
+    * stage whose RDDs carry no operation scope. */
+  private def stageName(info: StageInfo): String = {
+    val ops = org.apache.spark.sql.GraftStageBridge.scopeNames(info)
+    (if (ops.isEmpty) info.name.takeWhile(_ != '\n') else ops.mkString(" > ")).take(120)
   }
 
   private final class Tally {

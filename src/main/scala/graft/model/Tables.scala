@@ -3,20 +3,48 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sinks.ManifestTable
+import graft.sources.LruCache
+
 /** Fixture-table loaders plus the reference's constant dimension data.
   *
   * The driver fixtures (`TESTDATA.md`) are a TPC-H-ish star schema; the
   * reference→fixture mapping is specified in `FIXTURES.md §C`:
   * companies→customer, company_sends→orders, clay_webhooks→supplier.
   *
-  * Loaders are thin `spark.read.parquet` wrappers so Catalyst sees the
-  * Parquet relation directly (vectorized scan, filter/column pushdown,
-  * partition pruning all stay available). Do NOT cache here — at 100 TB
-  * the tables don't fit, and caching would pin the wrong plan.
+  * Loaders return plain parquet relations, so Catalyst sees the scan
+  * directly (vectorized scan, filter/column pushdown, partition pruning
+  * all stay available). Each path's schema is inferred once per content
+  * signature ([[ManifestTable.dirSignature]]: name, length and mtime)
+  * and per value of the confs that steer parquet→Spark type conversion;
+  * later loads pass it to `spark.read.schema`, which skips the footer-
+  * merge job a bare `spark.read.parquet` runs on every call. A rewritten
+  * file changes the signature and is inferred afresh. Only the schema is
+  * memoized — the data is never cached: at 100 TB the tables don't fit,
+  * and caching would pin the wrong plan.
   */
 object Tables {
-  private def p(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change the schema parquet footers convert to. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemaCache = new LruCache[(String, String), StructType](64)
+
+  private def p(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString("|", "|", "")
+    // a miss returns the inferring read itself: no second relation
+    var inferred: Option[DataFrame] = None
+    val schema = ManifestTable.memoDir(schemaCache, spark, path, confs) {
+      val df = spark.read.parquet(path)
+      inferred = Some(df)
+      df.schema
+    }
+    inferred.getOrElse(spark.read.schema(schema).parquet(path))
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = p(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = p(spark, dir, "nation")

@@ -511,17 +511,22 @@ object ManifestTable {
     * evicted on sight. A miss re-lists after the load: a commit that
     * landed during it may have fed the value either state, so it is
     * returned but memoized only when the signature is unchanged.
+    * `variant` extends the key, not the signed path: a value that also
+    * depends on session state (the fixture schema memo's parquet
+    * conversion confs) is held once per state of the same dir.
     */
   private[graft] def memoDir[V](cache: graft.sources.LruCache[(String, String), V],
-                                spark: SparkSession, dir: String)
+                                spark: SparkSession, dir: String,
+                                variant: String = "")
                                (load: => V): V =
     dirSignature(spark, dir) match {
       case Some(sig) =>
-        cache.get((dir, sig)).getOrElse {
+        val key = dir + variant
+        cache.get((key, sig)).getOrElse {
           val v = load
           if (dirSignature(spark, dir).contains(sig)) {
-            cache.put((dir, sig), v)
-            cache.removeIf(k => k._1 == dir && k._2 != sig)
+            cache.put((key, sig), v)
+            cache.removeIf(k => k._1 == key && k._2 != sig)
           }
           v
         }

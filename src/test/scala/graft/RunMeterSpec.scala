@@ -57,4 +57,14 @@ class RunMeterSpec extends SparkSpec {
       assert(meter.work("never-run") == RunMeter.Work())
     } finally meter.close()
   }
+
+  test("stages are named after the operators they ran, not the submitting call site") {
+    def write(): Unit = SparkEntry.benchQueries("fuzzy_bucket_counts")(spark, sfDir)
+      .write.mode("overwrite").format("noop").save()
+    write()
+    val names = RunMeter.measure(spark)(write()).stageDetail.map(_.name)
+    assert(names.nonEmpty)
+    assert(!names.exists(_.contains("CompletableFuture")), names.mkString("\n"))
+    assert(names.exists(_.contains("Exchange")), names.mkString("\n"))
+  }
 }
