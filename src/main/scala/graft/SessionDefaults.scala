@@ -35,11 +35,19 @@ object SessionDefaults {
     * reliable checkpoint dir (local FS here; HDFS/object store on a real
     * cluster), so iterative ops (Dedup.connectedComponents) take their
     * fault-tolerant branch, not the executor-local fallback.
+    *
+    * The generated-class cache holds 1000 classes, not Spark's 100: one
+    * such process runs far more than 100 distinct plans (the reference
+    * queries, or a test JVM's suites), so at 100 the cache evicts
+    * classes still in use and Janino recompiles them: ten
+    * schedules of `IndexConflictWalkSpec`'s hybrid walk compiled 1858
+    * classes in 58.6 s at 100 entries and 72 in 37.6 s at 1000 (4 CPUs).
     */
   def local(cpus: Int): SparkSession = {
     val spark = configure(SparkSession.builder()
         .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString))
+        .config("spark.sql.shuffle.partitions", cpus.toString)
+        .config("spark.sql.codegen.cache.maxEntries", "1000"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.setCheckpointDir(

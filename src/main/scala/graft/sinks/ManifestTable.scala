@@ -1859,9 +1859,13 @@ object ManifestTable {
     * set — one read + one broadcast anti-join per distinct group
     * (typically 2: pre-delete dirs and post-delete appends) however many
     * dirs the table holds — uncovered groups read plain, zero join. The
-    * anti-join is null-safe by construction: tombstones never hold null
-    * keys and a null-keyed data row never equi-matches, so it survives,
-    * matching "delete by key cannot target null".
+    * tombstone side is read under the imposed key-only schema (no
+    * schema-inference job) and broadcast as read: an anti-join only
+    * tests existence, so keys repeated across tombstone dirs need no
+    * de-duplicating shuffle. The anti-join is null-safe by construction:
+    * tombstones never hold null keys and a null-keyed data row never
+    * equi-matches, so it survives, matching "delete by key cannot target
+    * null".
     */
   private def readWithTombstones(spark: SparkSession, path: String,
                                  m: Manifest,
@@ -1877,11 +1881,16 @@ object ManifestTable {
         .parquet(readTargets(path, m, rels): _*)
       if (sig.isEmpty) base
       else base.join(
-        broadcast(spark.read.parquet(readTargets(path, m, sig): _*)
-          .select(m.keyCol).distinct()),
+        broadcast(spark.read.schema(tombstoneSchema(m))
+          .parquet(readTargets(path, m, sig): _*)),
         Seq(m.keyCol), "left_anti")
     }.reduce(_ unionByName _)
   }
+
+  /** What a tombstone file is read as: the key column alone, nullable
+    * like every imposed read schema ([[readSchema]]). */
+  private def tombstoneSchema(m: Manifest): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Seq(readSchema(m)(m.keyCol)))
 
   private def hasTombstones(m: Manifest): Boolean =
     m.tombstones.valuesIterator.exists(_.nonEmpty)

@@ -81,6 +81,27 @@ class MergeOnReadSpec extends SparkSpec {
       Set((7L, "new-7")))
   }
 
+  test("a tombstoned read runs one broadcast job per tombstoned group, with no shuffle") {
+    val path = tmp()
+    ManifestTable.write(batch(0 until 40, "a"), path, "id", 4)
+    // key 3 sits in both tombstone dirs, over the same data dirs
+    ManifestTable.deleteKeys(spark, path, Seq(3L, 5L).toDF("id"), "id")
+    ManifestTable.deleteKeys(spark, path, Seq(3L, 7L).toDF("id"), "id")
+    val tombstoned = ManifestTable.describeManifest(spark, path)
+      .tombstones.count(_._2.nonEmpty)
+    var got = Set.empty[(Long, String)]
+    val work = RunMeter.measure(spark) { got = contents(ManifestTable.read(spark, path)) }
+    assert(got == expected((0 until 40).filterNot(Set(3, 5, 7))
+      .map(i => (i.toLong, s"a-$i"))))
+    // each of a bucket's dirs carries that bucket's tombstone set, so a
+    // group per tombstoned bucket: its broadcast, plus the collect; a
+    // schema-inferring tombstone read or a de-duplicating shuffle would
+    // add jobs per group
+    assert(work.jobs <= tombstoned + 1,
+      s"${work.jobs} jobs for $tombstoned tombstoned groups: ${work.stageDetail.map(_.name)}")
+    assert(work.shuffleRecords == 0, s"tombstone keys were shuffled: $work")
+  }
+
   test("merge replaces matched keys and inserts new ones in ONE O(source) commit") {
     val path = tmp()
     ManifestTable.write(batch(0 until 50, "base"), path, "id", 4)
